@@ -18,6 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from recmetrics_pyspark_spark import cache
 from recmetrics_pyspark_spark.functions import curation as C
 from recmetrics_pyspark_spark.functions import text as T
 from recmetrics_pyspark_spark.operators import dedup as D
@@ -430,27 +431,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # Spark-side query callables
 # ---------------------------------------------------------------------------
 
-_SYNTH_RECS_MEMO: dict = {}
-
-
 def _synth_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic top-10 rec table (operators/recommend.py::
-    synthetic_recommendations), memoized per (application, sf_dir) —
-    round-12: ELEVEN declared queries consume this same (user, item,
-    rnk) frame with identical parameters (k=10 everywhere), and while
-    the distinct-pairs INPUT was cache-shared, each call re-ran the
+    synthetic_recommendations), a session memo — round-12: ELEVEN
+    declared queries consume this same (user, item, rnk) frame with
+    identical parameters (k=10 everywhere), and while the
+    distinct-pairs INPUT was cache-shared, each call re-ran the
     per-user ranking window over it (~1-2 s/query at sf0.1;
     within-probe A/B in SCALE.md). user × k rows, eagerly
-    localCheckpointed; session-lifetime, keyed like every session
-    memo in this file."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _SYNTH_RECS_MEMO.get(key)
-    if out is None:
-        out = R.synthetic_recommendations(spark, sf_dir).localCheckpoint(
+    localCheckpointed."""
+    return cache.memo(
+        "synth_recs",
+        spark,
+        sf_dir.rstrip("/"),
+        lambda: R.synthetic_recommendations(spark, sf_dir).localCheckpoint(
             eager=True
-        )
-        _SYNTH_RECS_MEMO[key] = out
-    return out
+        ),
+    )
 
 
 def _recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,19 +459,10 @@ def _recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one persisted distinct-pairs table feeds both sides: recs derive
-    # from it, and |distinct items in ratings| == |distinct items in
-    # pairs| by construction, so the raw interactions scan happens once.
-    # repartition("user") BEFORE the distinct: the identical canonical
-    # plan synthetic_recommendations builds (one user-keyed exchange
-    # serves the distinct AND its ranking window — round 13), so the
-    # session cache keeps deduplicating the frame across the family.
-    pairs = (
-        R.interactions(spark, sf_dir)
-        .repartition("user")
-        .distinct()
-        .persist()
-    )
+    # one distinct-pairs memo feeds both sides: recs derive from it,
+    # and |distinct items in ratings| == |distinct items in pairs| by
+    # construction, so the raw interactions scan happens once.
+    pairs = R.distinct_pairs(spark, sf_dir)
     recs = _synth_recs(spark, sf_dir).select(
         F.col("item").alias("item_id")
     )
@@ -602,20 +590,15 @@ def _item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ITEM_RECS_MEMO: dict = {}
-
-
 def _item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """item_based_recommendations' top-k output, memoized per
-    (application, sf_dir) — the _arena_games pattern: the operator
-    persists its INPUTS (the ranked neighbour list, the basket
-    arrays) but not its user-grain output, so mmr_rerank re-paid the
-    candidate join + anti-join + window on top of the cached inputs
-    every run (~3-5 s at sf0.1 in-bench). user x k rows —
-    persist-cheap at any scale."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _ITEM_RECS_MEMO.get(key)
-    if out is None:
+    """item_based_recommendations' top-k output, a session memo — the
+    _arena_games pattern: the operator persists its INPUTS (the ranked
+    neighbour list, the basket arrays) but not its user-grain output,
+    so mmr_rerank re-paid the candidate join + anti-join + window on
+    top of the cached inputs every run (~3-5 s at sf0.1 in-bench).
+    user x k rows — persist-cheap at any scale."""
+
+    def build():
         out = R.item_based_recommendations(
             R.interactions(spark, sf_dir),
             col_user="user",
@@ -624,12 +607,9 @@ def _item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_basket=MAX_BASKET,
         ).persist()
         out.count()
-        _ITEM_RECS_MEMO[key] = out
-    return out
+        return out
 
-
-def _item_based_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _item_recs(spark, sf_dir)
+    return cache.memo("item_recs", spark, sf_dir.rstrip("/"), build)
 
 
 def _long_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -807,13 +787,10 @@ def _dedup_exact(spark, sf_dir):
     return D.exact_dedup(_docs(spark, sf_dir))
 
 
-_EXACT_PAIRS_MEMO: dict = {}
-
-
 def _exact_pairs(spark, sf_dir):
     """The exact word-3-gram Jaccard >= 0.1 truth table
     (operators/dedup.py::ngram_jaccard_pairs — inverted-index,
-    df-capped), memoized per (application, sf_dir) — the
+    df-capped), a session memo — the
     _arena_games/_item_recs pattern applied to the recall-report
     family: ngram_jaccard_pairs (the declared query),
     lsh_recall_report, and simhash_recall_report each consumed this
@@ -822,20 +799,15 @@ def _exact_pairs(spark, sf_dir):
     never share across queries (round-11 verdict weak mark; measured
     ~13 s/round across the three at sf0.1 vs ~2-4 s marginal).
     Materialized eagerly at the surviving-pair grain (output-scale:
-    pairs above threshold, not the corpus); session-lifetime, keyed
-    like every session memo in this file."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _EXACT_PAIRS_MEMO.get(key)
-    if out is None:
-        out = D.ngram_jaccard_pairs(
+    pairs above threshold, not the corpus)."""
+    return cache.memo(
+        "exact_pairs",
+        spark,
+        sf_dir.rstrip("/"),
+        lambda: D.ngram_jaccard_pairs(
             _docs(spark, sf_dir), threshold=0.1
-        ).localCheckpoint(eager=True)
-        _EXACT_PAIRS_MEMO[key] = out
-    return out
-
-
-def _ngram_jaccard(spark, sf_dir):
-    return _exact_pairs(spark, sf_dir)
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _dedup_threshold_sweep(spark, sf_dir):
@@ -905,39 +877,32 @@ def _lsh_recall_report(spark, sf_dir):
     )
 
 
-_ARENA_GAMES_MEMO: dict = {}
-
-
 def _arena_games(spark, sf_dir):
-    """The mined DPO game table, memoized per (application, sf_dir) —
-    the _INTERACTIONS_MEMO pattern one level up: both arena queries
+    """The mined DPO game table, a session memo — the interactions
+    memo one level up: both arena queries
     (ratings + iteration sensitivity) consume the SAME mining
     pipeline (windows over the shared interactions frame), and
     without the memo each pays it separately (bradley_terry's g1
     localCheckpoint is per-call, so the cache manager's
     canonicalized-plan matching never engages across queries).
-    Materialized eagerly at the game grain; session-lifetime."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    g = _ARENA_GAMES_MEMO.get(key)
-    if g is None:
+    Materialized eagerly at the game grain."""
+
+    def build():
         pairs = C.dpo_pair_mining(
             R.interactions(spark, sf_dir, with_rating=True),
             min_margin=1.0,
         )
-        g = pairs.select(
+        return pairs.select(
             F.col("chosen_item").alias("winner"),
             F.col("rejected_item").alias("loser"),
         ).localCheckpoint(eager=True)
-        _ARENA_GAMES_MEMO[key] = g
-    return g
 
-
-_BT_CHAIN_MEMO: dict = {}
+    return cache.memo("arena_games", spark, sf_dir.rstrip("/"), build)
 
 
 def _bt_chain(spark, sf_dir):
     """The 8-round Bradley-Terry MM chain over the shared
-    _arena_games table, fitted ONCE per (application, sf_dir) with
+    _arena_games table, fitted ONCE per session with
     round 4 marked — both arena queries are snapshots of this one
     chain (ratings reads round 8; sensitivity reads rounds 4 and 8).
     Marking only records a snapshot, never changes the chain, so
@@ -946,14 +911,12 @@ def _bt_chain(spark, sf_dir):
     the chain's own internals are checkpointed by _bt_fit."""
     from recmetrics_pyspark_spark.operators.ranking import bt_fit_chain
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fit = _BT_CHAIN_MEMO.get(key)
-    if fit is None:
-        fit = bt_fit_chain(
-            _arena_games(spark, sf_dir), iters=8, marks=(4,)
-        )
-        _BT_CHAIN_MEMO[key] = fit
-    return fit
+    return cache.memo(
+        "bt_chain",
+        spark,
+        sf_dir.rstrip("/"),
+        lambda: bt_fit_chain(_arena_games(spark, sf_dir), iters=8, marks=(4,)),
+    )
 
 
 def _arena_bt_ratings(spark, sf_dir):
@@ -1152,32 +1115,24 @@ def _minhash_lsh(spark, sf_dir):
     return D.minhash_lsh_pairs(_docs(spark, sf_dir), threshold=0.1)
 
 
-_NEARDUP_COMPS_MEMO: dict = {}
-
-
 def _neardup_comps(spark, sf_dir):
     """The Jaccard >= 0.5 near-dup component table
     (operators/dedup.py::neardup_components — min-label propagation,
-    iters=4), memoized per (application, sf_dir): the declared
+    iters=4), a session memo: the declared
     neardup_components query, canonical_docs, and soft_dedup_weights
     all consumed this same table, and each call re-ran the 4
     localCheckpointed propagation rounds (per-round checkpoints never
     canonicalize equal across calls — the established memo class;
     within-probe A/B in SCALE.md round-12). Component-grain frame
-    (docs in >= 1 near-dup pair); session-lifetime, keyed like every
-    session memo in this file."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _NEARDUP_COMPS_MEMO.get(key)
-    if out is None:
-        out = D.neardup_components(
+    (docs in >= 1 near-dup pair)."""
+    return cache.memo(
+        "neardup_comps",
+        spark,
+        sf_dir.rstrip("/"),
+        lambda: D.neardup_components(
             _docs(spark, sf_dir), threshold=0.5, iters=4
-        ).localCheckpoint(eager=True)
-        _NEARDUP_COMPS_MEMO[key] = out
-    return out
-
-
-def _neardup_components(spark, sf_dir):
-    return _neardup_comps(spark, sf_dir)
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _bt_oracle(iters: int = 8) -> str:
@@ -1379,31 +1334,23 @@ def _simhash_near(spark, sf_dir):
     return D.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=1)
 
 
-_ANN_TRUTH_MEMO: dict = {}
-
-
 def _ann_truth(spark, sf_dir):
     """The exact brute-force top-10 for the standard query set
-    (vec_id < 5), memoized per (application, sf_dir) — the
+    (vec_id < 5), a session memo — the
     _exact_pairs pattern applied to the ANN family: the declared
     ann_bruteforce_topk query and all four recall reports
     (ann/sq/ivf/pq) derive this identical truth, and each call
     re-paid the full-corpus scoring scan (~1.2 s each at sf0.1, five
     consumers). |Q| x k rows — output-scale, checkpoint-cheap at any
     corpus size."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _ANN_TRUTH_MEMO.get(key)
-    if out is None:
+
+    def build():
         embs = _embs(spark, sf_dir)
-        out = S.ann_bruteforce_topk(
+        return S.ann_bruteforce_topk(
             embs, embs.filter(F.col("vec_id") < 5), k=10
         ).localCheckpoint(eager=True)
-        _ANN_TRUTH_MEMO[key] = out
-    return out
 
-
-def _ann_topk(spark, sf_dir):
-    return _ann_truth(spark, sf_dir)
+    return cache.memo("ann_truth", spark, sf_dir.rstrip("/"), build)
 
 
 def _ivf_ann_topk(spark, sf_dir):
@@ -4058,19 +4005,27 @@ def _heaps_law_docs(spark, sf_dir):
     return T.heaps_law_points(_docs(spark, sf_dir))
 
 
-_KCORE_MEMO: dict = {}
-# the k every declared k-core query peels at; the convergence guard's
-# fallback must rebuild with the SAME k (tests override it to drive
-# adversarial graphs through the guard)
+# the k every declared k-core query peels at, and the round backstop
+# of kcore_items_converged's fallback peel (tests override both to
+# drive adversarial graphs through the convergence guard)
 _KCORE_K = 3
+_KCORE_MAX_ROUNDS = 64
+
+
+def _kcore_pairs(spark, sf_dir):
+    inter = R.interactions(spark, sf_dir)
+    return M.item_similarity_pairs(
+        inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+    )
 
 
 def _kcore_core(spark, sf_dir):
-    """The 3-core peel OUTPUT (node, degree, converged), memoized per
-    (application, sf_dir) — the _bt_chain doctrine applied to the
-    k-core twins: kcore_items (fixed 8 rounds) and
-    kcore_items_converged (peel-to-fixed-point) produce the identical
-    table on every declared corpus — the peel converges within 8
+    """The 3-core peel OUTPUT (node, degree, converged) of the
+    declared kcore_items query, a session memo — the _bt_chain
+    doctrine applied to the k-core twins: kcore_items (fixed 8
+    rounds) and kcore_items_converged (peel-to-fixed-point) produce
+    the identical table on every declared corpus — the peel
+    converges within 8
     rounds (property-pinned by test_kcore_peel_idempotent_past_
     convergence) and BOTH queries are checked against the same
     fixed-8-round oracle CTE (_kcore_oracle) — yet each ran its own
@@ -4083,31 +4038,17 @@ def _kcore_core(spark, sf_dir):
     it. The until_converged loop-exit machinery stays pinned by
     tests/test_round12_ops.py::test_kcore_memo_matches_fresh_converged
     (fresh until_converged run == memoized table) and the round-6
-    property test. Node-grain frame; session-lifetime, keyed like
-    every session memo in this file."""
+    property test. Node-grain frame."""
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _KCORE_MEMO.get(key)
-    if out is None:
-        inter = R.interactions(spark, sf_dir)
-        pairs = M.item_similarity_pairs(
-            inter, "user", "item", min_common=2, max_basket=MAX_BASKET
-        )
-        out = k_core_decompose(pairs, k=_KCORE_K, rounds=8).localCheckpoint(
-            eager=True
-        )
-        _KCORE_MEMO[key] = out
-    return out
-
-
-def _kcore_items(spark, sf_dir):
-    """3-core of the item co-occurrence graph
-    (operators/graph.py::k_core_decompose): 8 synchronous peels over
-    the persisted item-pair table; surviving (node, degree) rows —
-    the dense-community extractor. Reads the _kcore_core session
-    memo shared with kcore_items_converged."""
-    return _kcore_core(spark, sf_dir)
+    return cache.memo(
+        "kcore",
+        spark,
+        sf_dir.rstrip("/"),
+        lambda: k_core_decompose(
+            _kcore_pairs(spark, sf_dir), k=_KCORE_K, rounds=8
+        ).localCheckpoint(eager=True),
+    )
 
 
 def _kcore_items_converged(spark, sf_dir):
@@ -4121,25 +4062,38 @@ def _kcore_items_converged(spark, sf_dir):
     mode must land on, bit-identically). On an adversarial graph
     (a long path needs ~n/2 peels) the witness is false and the memo
     is a SUPERSET of the true core — the guard below detects that and
-    runs a real until-converged peel instead of silently serving it.
-    The happy-path cost is one head(1) over the checkpointed
-    node-grain table (the established size-guard-count convention);
-    guard behavior pinned both ways in tests/test_round13_ops.py,
-    memo-vs-fresh equality in tests/test_round12_ops.py."""
+    serves a real until-converged peel instead, itself a session memo
+    so it runs once per session. If that peel still has not converged
+    after ``_KCORE_MAX_ROUNDS`` rounds, the query raises rather than
+    return a superset. The happy-path cost is one head(1) over the
+    checkpointed node-grain table (the established size-guard-count
+    convention); guard behavior pinned both ways in
+    tests/test_round13_ops.py, memo-vs-fresh equality in
+    tests/test_round12_ops.py."""
     out = _kcore_core(spark, sf_dir)
-    if out.filter(~F.col("converged")).head(1):
+    if not out.filter(~F.col("converged")).head(1):
+        return out
+
+    def build():
         from recmetrics_pyspark_spark.operators.graph import (
             k_core_decompose,
         )
 
-        inter = R.interactions(spark, sf_dir)
-        pairs = M.item_similarity_pairs(
-            inter, "user", "item", min_common=2, max_basket=MAX_BASKET
+        peel = k_core_decompose(
+            _kcore_pairs(spark, sf_dir),
+            k=_KCORE_K,
+            until_converged=True,
+            max_rounds=_KCORE_MAX_ROUNDS,
         )
-        return k_core_decompose(
-            pairs, k=_KCORE_K, until_converged=True
-        )
-    return out
+        if peel.filter(~F.col("converged")).head(1):
+            raise ValueError(
+                f"kcore_items_converged: the {_KCORE_K}-core peel did not "
+                f"converge within max_rounds={_KCORE_MAX_ROUNDS}; its rows "
+                "would be a superset of the core"
+            )
+        return peel.localCheckpoint(eager=True)
+
+    return cache.memo("kcore_converged", spark, sf_dir.rstrip("/"), build)
 
 
 def _corpus_entropy(spark, sf_dir):
@@ -5058,7 +5012,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "balanced_sample": _balanced_sample,
         "simhash_signatures": _simhash,
         "simhash_near_pairs": _simhash_near,
-        "neardup_components": _neardup_components,
+        "neardup_components": _neardup_comps,
         # --- stable canaries (r2-green) to detect harness regressions
         "coverage": _coverage,
         "personalization": _personalization,
@@ -5084,13 +5038,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "personalization_weighted": _personalization_weighted,
         "intra_list_similarity": _intra_list_similarity,
         "item_item_topk": _item_item_topk,
-        "item_based_recommendations": _item_based_recs,
+        "item_based_recommendations": _item_recs,
         "long_tail_stats": _long_tail,
         "decay_popularity": _decay_popularity,
         "value_histogram": _value_histogram,
         # --- dedup (operators/dedup.py)
         "dedup_exact": _dedup_exact,
-        "ngram_jaccard_pairs": _ngram_jaccard,
+        "ngram_jaccard_pairs": _exact_pairs,
         # --- round-12 addition: the threshold-sizing report over the
         # _exact_pairs memo (first driver witness due round 13)
         "dedup_threshold_sweep": _dedup_threshold_sweep,
@@ -5105,7 +5059,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ivf_recall_report": _ivf_recall_report,
         "dedup_pipeline": _dedup_pipeline,
         # --- similarity search / clustering (operators/similarity.py)
-        "ann_bruteforce_topk": _ann_topk,
+        "ann_bruteforce_topk": _ann_truth,
         "ann_lsh_topk": _ann_lsh_topk,
         "ivf_ann_topk": _ivf_ann_topk,
         "pq_ann_topk": _pq_ann_topk,
@@ -5282,7 +5236,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "attribution_time_decay": _attribution_time_decay,
         "centroid_distances": _centroid_distances,
         "heaps_law_docs": _heaps_law_docs,
-        "kcore_items": _kcore_items,
+        "kcore_items": _kcore_core,
         "corpus_entropy": _corpus_entropy,
         "seasonal_decompose_events": _seasonal_decompose_events,
         "pq_distortion": _pq_distortion,

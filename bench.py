@@ -221,11 +221,31 @@ import __spark_entry__ as entrymod  # noqa: E402
 from recmetrics_pyspark_spark import get_spark  # noqa: E402
 
 
+def _only(qs: dict, only: str | None) -> dict:
+    """SPARK_GRAFT_BENCH_ONLY: comma-separated declared-query subset for
+    SCRATCH lanes (the r13 sf1.0 scaling lane runs just the top-10
+    heavies at 10x data). When it is unset, a run times the full
+    declared set in declared order.
+    Raises ``ValueError`` naming every unknown name and the declared
+    ones, before any Spark work starts."""
+    if not only:
+        return qs
+    keep = [n.strip() for n in only.split(",") if n.strip()]
+    unknown = [n for n in keep if n not in qs]
+    if unknown:
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_ONLY names unknown queries {unknown}; "
+            f"declared queries are: {', '.join(qs)}"
+        )
+    return {n: qs[n] for n in keep}
+
+
 def main() -> None:
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1"))
     if n_runs > 1:
         _multi_run(n_runs)
         return
+    qs = _only(entrymod.queries(), os.environ.get("SPARK_GRAFT_BENCH_ONLY"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     n_threads = int(os.environ.get("SPARK_GRAFT_BENCH_THREADS", "1"))
@@ -262,15 +282,6 @@ def main() -> None:
     except Exception as exc:
         print(f"[bench] warm-up skipped: {exc}", file=sys.stderr)
 
-    qs = entrymod.queries()
-    # SPARK_GRAFT_BENCH_ONLY: comma-separated declared-query subset for
-    # SCRATCH lanes (the r13 sf1.0 scaling lane runs just the top-10
-    # heavies at 10x data). ADDITIVE knob: the driver never sets it, so
-    # its runs always time the full declared set in declared order.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = [n.strip() for n in only.split(",") if n.strip()]
-        qs = {n: qs[n] for n in keep}
     timings: dict[str, float] = {}
 
     def run_one(item):

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cache
+
 
 def _node_broadcast_hint(df: DataFrame, limit: int):
     """Shared size guard for NODE-scale tables (degree/label tables —
@@ -361,9 +363,6 @@ def triangle_stats(
     )
 
 
-_ADJ_MEMO: dict = {}
-
-
 def _capped_adjacency(
     pairs: DataFrame,
     col_a: str,
@@ -388,8 +387,34 @@ def _capped_adjacency(
     (capped) — registry memory is negligible at any corpus size."""
     from pyspark.sql.window import Window
 
+    def build():
+        both = pairs.select(
+            F.col(col_a).alias("z"), F.col(col_b).alias("nbr"),
+            F.col(col_w).alias("w"),
+        ).unionByName(
+            pairs.select(
+                F.col(col_b).alias("z"), F.col(col_a).alias("nbr"),
+                F.col(col_w).alias("w"),
+            )
+        )
+        deg, _, hint = _node_broadcast_hint(
+            both.groupBy("z").agg(F.count(F.lit(1)).alias("deg")),
+            broadcast_node_limit,
+        )
+        wr = Window.partitionBy("z").orderBy(F.desc("w"), F.asc("nbr"))
+        # materialized: the capped adjacency feeds BOTH sides of the
+        # wedge self-join, and without the boundary the edge-scale
+        # top-neighbor window evaluates once per side (A/B at sf0.1
+        # over the cached pair table: 8.2-9.4 s -> 5.7-6.8 s).
+        # node x top_neighbors rows — tiny at any scale
+        capped = (
+            both.withColumn("r", F.row_number().over(wr))
+            .filter(F.col("r") <= top_neighbors)
+            .select("z", "nbr")
+        ).localCheckpoint(eager=True)
+        return capped, deg, hint
+
     key = (
-        pairs.sparkSession.sparkContext.applicationId,
         pairs._jdf.queryExecution().analyzed().semanticHash(),
         col_a,
         col_b,
@@ -397,43 +422,11 @@ def _capped_adjacency(
         int(top_neighbors),
         int(broadcast_node_limit),
     )
-    got = _ADJ_MEMO.get(key)
-    if got is not None:
-        return got
-    both = pairs.select(
-        F.col(col_a).alias("z"), F.col(col_b).alias("nbr"),
-        F.col(col_w).alias("w"),
-    ).unionByName(
-        pairs.select(
-            F.col(col_b).alias("z"), F.col(col_a).alias("nbr"),
-            F.col(col_w).alias("w"),
-        )
-    )
-    deg, _, hint = _node_broadcast_hint(
-        both.groupBy("z").agg(F.count(F.lit(1)).alias("deg")),
-        broadcast_node_limit,
-    )
-    wr = Window.partitionBy("z").orderBy(F.desc("w"), F.asc("nbr"))
-    # materialized: the capped adjacency feeds BOTH sides of the wedge
-    # self-join, and without the boundary the edge-scale top-neighbor
-    # window evaluates once per side (A/B at sf0.1 over the cached
-    # pair table: 8.2-9.4 s -> 5.7-6.8 s). node x top_neighbors rows —
-    # tiny at any scale
-    capped = (
-        both.withColumn("r", F.row_number().over(wr))
-        .filter(F.col("r") <= top_neighbors)
-        .select("z", "nbr")
-    ).localCheckpoint(eager=True)
-    _ADJ_MEMO[key] = (capped, deg, hint)
-    return _ADJ_MEMO[key]
+    return cache.memo("capped_adjacency", pairs.sparkSession, key, build)
 
 
-def clear_adjacency_cache() -> None:
-    """Drop every memoized adjacency (see :func:`_capped_adjacency`) —
-    the same explicit-lifecycle contract as
-    similarity.clear_trained_cache for callers that churn through
-    many graphs in one application."""
-    _ADJ_MEMO.clear()
+# kept importable for callers written before the session cache
+clear_adjacency_cache = cache.clear
 
 
 def adamic_adar_links(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import cache
 from ..sources.io import load_table
 
 # Knuth-style multiplicative constants; small enough that
@@ -25,22 +26,8 @@ _HASH_B = 40503
 _HASH_MOD = 1000003
 
 
-_INTERACTIONS_MEMO: dict[tuple, DataFrame] = {}
-
-
-def clear_interactions_cache() -> None:
-    """Drop the memoized interactions frames (mirrors
-    similarity.clear_trained_cache). Call alongside
-    ``spark.catalog.clearCache()`` when switching corpora — clearing
-    only the Spark cache would leave the memo returning now-uncached
-    frames that silently recompute the orders⋈lineitem join per
-    consumer."""
-    for df in _INTERACTIONS_MEMO.values():
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to drop
-            pass
-    _INTERACTIONS_MEMO.clear()
+# kept importable for callers written before the session cache
+clear_interactions_cache = cache.clear
 
 
 def interactions(
@@ -51,32 +38,21 @@ def interactions(
     Mirrors the reference's tall/stacked data model (SURVEY.md §1.1):
     one row per purchase event; rating = l_quantity.
 
-    The (rated) frame is memoized and persisted per (application,
-    sf_dir): it is the shared input of the entire recommender-metric
-    family, and without materialization every consumer re-runs the
-    orders⋈lineitem join from the parquet scans. Session-lifetime
-    cache contract (MEMORY_AND_DISK, same as the dedup family's
-    shared intermediates); `spark.catalog.clearCache()` drops it
-    between corpora. The un-rated projection derives from the cached
-    frame, so both variants share one materialization."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    out = _INTERACTIONS_MEMO.get(key)
-    if out is not None and not (
-        out.storageLevel.useMemory or out.storageLevel.useDisk
-    ):
-        # someone ran spark.catalog.clearCache() without
-        # clear_interactions_cache(): the memo would hand out an
-        # uncached frame forever, silently recomputing the join per
-        # consumer — re-persist to restore the memoization contract
-        out.persist()
-    if out is None:
+    The (rated) frame is persisted once per session (``cache.memo``):
+    it is the shared input of the entire recommender-metric family,
+    and without materialization every consumer re-runs the
+    orders⋈lineitem join from the parquet scans. The un-rated
+    projection derives from the cached frame, so both variants share
+    one materialization."""
+
+    def build():
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey"
         )
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity"
         )
-        out = (
+        return (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .select(
                 F.col("o_custkey").alias("user"),
@@ -85,10 +61,30 @@ def interactions(
             )
             .persist()
         )
-        _INTERACTIONS_MEMO[key] = out
+
+    out = cache.memo("interactions", spark, sf_dir.rstrip("/"), build)
     if not with_rating:
         return out.select("user", "item")
     return out
+
+
+def distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct purchased (user, item) pairs, persisted once per
+    session: the input of :func:`synthetic_recommendations` and the
+    item side of the coverage metric. ``repartition("user")`` before
+    the distinct lets ONE user-keyed shuffle serve both the distinct
+    and the ranking window downstream (HashPartitioning(user)
+    satisfies the (user, item) distinct's clustered distribution and
+    the window's partitionBy(user))."""
+    return cache.memo(
+        "distinct_pairs",
+        spark,
+        sf_dir.rstrip("/"),
+        lambda: interactions(spark, sf_dir)
+        .repartition("user")
+        .distinct()
+        .persist(),
+    )
 
 
 def pseudo_score(user_col, item_col):
@@ -184,26 +180,11 @@ def synthetic_recommendations(
 ) -> DataFrame:
     """Deterministic top-k recs per user: (user, item, rnk).
 
-    Distinct purchased pairs ranked by a portable hash and no
-    data-dependent randomness. ONE user-keyed shuffle serves both the
-    distinct and the ranking window (round 13): HashPartitioning(user)
-    satisfies the (user, item) distinct's clustered distribution AND
-    the window's partitionBy(user), so the explicit repartition
-    replaces what were two exchanges (the distinct hashed on BOTH
-    columns, then the window re-shuffled back to user). Callers that
-    build the same frame (the coverage canary) use the identical
-    repartition("user").distinct() form so the session cache still
-    deduplicates the plan. Pass a pre-built (user, item) ``pairs``
-    frame to share lineage with other consumers; the distinct result
-    is persisted (vocabulary-scale) so metric queries that derive
-    both sales and recs from interactions scan the input once."""
+    Distinct purchased pairs (:func:`distinct_pairs` unless a
+    pre-built (user, item) ``pairs`` frame is passed) ranked by a
+    portable hash and no data-dependent randomness."""
     if pairs is None:
-        pairs = (
-            interactions(spark, sf_dir)
-            .repartition("user")
-            .distinct()
-            .persist()
-        )
+        pairs = distinct_pairs(spark, sf_dir)
     scored = pairs.withColumn("score", pseudo_score(F.col("user"), F.col("item")))
     return top_k_per_group(
         scored, "user", [F.asc("score"), F.asc("item")], k

@@ -68,35 +68,30 @@ def _suffix_tokens(texts: pa.ChunkedArray, r: int) -> pa.Array:
 
 def _replica(name: str, tbl: pa.Table, r: int) -> pa.Table:
     if r == 0:
-        if name != "documents":
-            return tbl
-        # replica 0 keeps text; recompute n_chars anyway for uniformity
-        t = tbl
-    else:
-        t = tbl
-        for col, shift in SHIFTS.get(name, {}).items():
-            idx = t.schema.get_field_index(col)
-            typ = t.schema.field(idx).type
-            shifted = pc.add(t.column(col), pa.scalar(r * shift, type=typ))
-            t = t.set_column(idx, t.schema.field(idx), shifted)
-        if name == "documents":
-            idx = t.schema.get_field_index("text")
-            t = t.set_column(
-                idx, t.schema.field(idx), _suffix_tokens(t.column("text"), r)
-            )
-        if name == "embeddings":
-            idx = t.schema.get_field_index("embedding")
-            vecs = t.column("embedding").to_pylist()
-            rot = [v[r % len(v):] + v[: r % len(v)] if v else v for v in vecs]
-            t = t.set_column(
-                idx,
-                t.schema.field(idx),
-                pa.array(rot, type=t.schema.field(idx).type),
-            )
+        return tbl
+    t = tbl
+    for col, shift in SHIFTS.get(name, {}).items():
+        idx = t.schema.get_field_index(col)
+        typ = t.schema.field(idx).type
+        shifted = pc.add(t.column(col), pa.scalar(r * shift, type=typ))
+        t = t.set_column(idx, t.schema.field(idx), shifted)
     if name == "documents":
+        idx = t.schema.get_field_index("text")
+        t = t.set_column(
+            idx, t.schema.field(idx), _suffix_tokens(t.column("text"), r)
+        )
         idx = t.schema.get_field_index("n_chars")
         nch = pc.cast(pc.utf8_length(t.column("text")), pa.int64())
         t = t.set_column(idx, t.schema.field(idx), nch)
+    if name == "embeddings":
+        idx = t.schema.get_field_index("embedding")
+        vecs = t.column("embedding").to_pylist()
+        rot = [v[r % len(v):] + v[: r % len(v)] if v else v for v in vecs]
+        t = t.set_column(
+            idx,
+            t.schema.field(idx),
+            pa.array(rot, type=t.schema.field(idx).type),
+        )
     return t
 
 

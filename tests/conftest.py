@@ -93,7 +93,7 @@ def pytest_collection_modifyitems(config, items):
     if config.getoption("-m"):
         return  # explicit marker expression: the user decides
     # direct single-file / single-test invocation is an explicit ask
-    args = [a for a in config.invocation_params.args if not a.startswith("-")]
+    args = config.args
     if args and all("tests" != os.path.basename(os.path.normpath(a)) for a in args):
         targeted = {os.path.basename(a.split("::")[0]) for a in args}
         if all(t.endswith(".py") for t in targeted):

@@ -525,8 +525,9 @@ def test_duplicated_spans_extracts_shared_run(spark):
 def test_interactions_memo_survives_clear_cache(spark):
     """spark.catalog.clearCache() drops the persisted frame but not
     the memo: the next interactions() call must re-persist (not hand
-    out an uncached frame forever), and clear_interactions_cache()
-    empties the memo itself."""
+    out an uncached frame forever), and cache.clear() empties the
+    memo itself."""
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators import recommend as R
 
     sf = "/root/testdata/sf0.001"
@@ -535,11 +536,11 @@ def test_interactions_memo_survives_clear_cache(spark):
     spark.catalog.clearCache()
     df2 = R.interactions(spark, sf, with_rating=True)
     assert df2.storageLevel.useMemory or df2.storageLevel.useDisk
-    R.clear_interactions_cache()
-    assert R._INTERACTIONS_MEMO == {}
+    cache.clear()
+    assert not any(k[1] == "interactions" for k in cache._ENTRIES)
     # and the next call rebuilds from scratch without error
     assert R.interactions(spark, sf).columns == ["user", "item"]
-    R.clear_interactions_cache()
+    cache.clear()
 
 
 def test_doc_perplexity_hand_computed(spark):

@@ -252,27 +252,29 @@ def test_ivf_recall_report_bounds_and_consistency(spark):
 
 def test_capped_adjacency_memo_shared_and_clearable(spark):
     """The two link predictors over the same pair table share one
-    memoized (capped, deg) build; clear_adjacency_cache drops it; and
+    memoized (capped, deg) build; cache.clear() drops it; and
     predictor outputs are identical whether the memo is cold or
     warm."""
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators.graph import (
-        _ADJ_MEMO,
         adamic_adar_links,
-        clear_adjacency_cache,
         common_neighbor_links,
     )
+
+    def n_entries():
+        return sum(k[1] == "capped_adjacency" for k in cache._ENTRIES)
 
     pairs = spark.createDataFrame(
         [("a", "b", 3), ("a", "c", 2), ("b", "c", 2), ("b", "d", 1)],
         ["ia", "ib", "n_common"],
     )
-    clear_adjacency_cache()
+    cache.clear()
     cold_aa = sorted(map(tuple, adamic_adar_links(pairs).collect()))
-    assert len(_ADJ_MEMO) == 1
+    assert n_entries() == 1
     cold_cn = sorted(map(tuple, common_neighbor_links(pairs).collect()))
-    assert len(_ADJ_MEMO) == 1  # second predictor hit the same entry
-    clear_adjacency_cache()
-    assert len(_ADJ_MEMO) == 0
+    assert n_entries() == 1  # second predictor hit the same entry
+    cache.clear()
+    assert n_entries() == 0
     warm_aa = sorted(map(tuple, adamic_adar_links(pairs).collect()))
     warm_cn = sorted(map(tuple, common_neighbor_links(pairs).collect()))
     assert cold_aa == warm_aa and cold_cn == warm_cn

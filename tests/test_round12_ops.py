@@ -17,23 +17,31 @@ pytestmark = pytest.mark.skipif(
 )
 
 
+def _entries(name):
+    """Session-cache entries stored under ``name``."""
+    from recmetrics_pyspark_spark import cache
+
+    return sum(k[1] == name for k in cache._ENTRIES)
+
+
 def test_exact_pairs_memo_shared_and_equal(spark):
     """All three exact-Jaccard consumers hit ONE memo entry per
     (application, sf_dir), and the memoized table is row-identical to
     a fresh ngram_jaccard_pairs derivation (the memo changes where
     the table is materialized, never its values)."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators import dedup as D
 
-    e._EXACT_PAIRS_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["ngram_jaccard_pairs"](spark, SF_DIR).collect())
     )
-    assert len(e._EXACT_PAIRS_MEMO) == 1
+    assert _entries("exact_pairs") == 1
     qs["lsh_recall_report"](spark, SF_DIR).collect()
     qs["simhash_recall_report"](spark, SF_DIR).collect()
-    assert len(e._EXACT_PAIRS_MEMO) == 1  # both reports hit the entry
+    assert _entries("exact_pairs") == 1  # both reports hit the entry
 
     fresh = sorted(
         map(
@@ -45,7 +53,7 @@ def test_exact_pairs_memo_shared_and_equal(spark):
     )
     assert memo_rows == fresh
     assert len(memo_rows) > 0
-    e._EXACT_PAIRS_MEMO.clear()
+    cache.clear()
 
 
 def test_recall_reports_consistent_with_memoized_truth(spark):
@@ -53,9 +61,10 @@ def test_recall_reports_consistent_with_memoized_truth(spark):
     the same aggregation computed from a fresh truth table — n_exact
     must equal the fresh pair count in every row."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators import dedup as D
 
-    e._EXACT_PAIRS_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     n_fresh = D.ngram_jaccard_pairs(
         e._docs(spark, SF_DIR), threshold=0.1
@@ -67,7 +76,7 @@ def test_recall_reports_consistent_with_memoized_truth(spark):
     for r in list(lsh) + list(sim):
         assert r.n_exact == n_fresh
         assert 0 <= r.n_hit <= r.n_exact
-    e._EXACT_PAIRS_MEMO.clear()
+    cache.clear()
 
 
 def test_jaccard_threshold_sweep_exact_counts(spark):
@@ -134,14 +143,15 @@ def test_bt_chain_memo_shared_across_arena_queries(spark):
     """Both arena queries hit ONE _bt_chain entry per (application,
     sf_dir)."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
 
-    e._BT_CHAIN_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     qs["arena_bt_ratings"](spark, SF_DIR).collect()
-    assert len(e._BT_CHAIN_MEMO) == 1
+    assert _entries("bt_chain") == 1
     qs["arena_bt_sensitivity"](spark, SF_DIR).collect()
-    assert len(e._BT_CHAIN_MEMO) == 1
-    e._BT_CHAIN_MEMO.clear()
+    assert _entries("bt_chain") == 1
+    cache.clear()
 
 
 def test_ann_truth_memo_shared_and_equal(spark):
@@ -150,14 +160,15 @@ def test_ann_truth_memo_shared_and_equal(spark):
     (application, sf_dir); the memoized ranking is row-identical to
     a fresh brute-force derivation."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators import similarity as S
 
-    e._ANN_TRUTH_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["ann_bruteforce_topk"](spark, SF_DIR).collect())
     )
-    assert len(e._ANN_TRUTH_MEMO) == 1
+    assert _entries("ann_truth") == 1
     for name in (
         "ann_recall_report",
         "sq_recall_report",
@@ -166,7 +177,7 @@ def test_ann_truth_memo_shared_and_equal(spark):
         "hybrid_rrf_topk",
     ):
         qs[name](spark, SF_DIR).collect()
-    assert len(e._ANN_TRUTH_MEMO) == 1  # every consumer hit the entry
+    assert _entries("ann_truth") == 1  # every consumer hit the entry
 
     embs = e._embs(spark, SF_DIR)
     fresh = sorted(
@@ -179,7 +190,7 @@ def test_ann_truth_memo_shared_and_equal(spark):
     )
     assert memo_rows == fresh
     assert len(memo_rows) > 0
-    e._ANN_TRUTH_MEMO.clear()
+    cache.clear()
 
 
 def test_kcore_memo_matches_fresh_converged(spark):
@@ -189,19 +200,20 @@ def test_kcore_memo_matches_fresh_converged(spark):
     converged declared row read the memo — and both declared queries
     hit one memo entry."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark import operators as _ops  # noqa: F401
     from recmetrics_pyspark_spark.operators import metrics as M
     from recmetrics_pyspark_spark.operators import recommend as R
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
 
-    e._KCORE_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     memo_rows = sorted(map(tuple, qs["kcore_items"](spark, SF_DIR).collect()))
-    assert len(e._KCORE_MEMO) == 1
+    assert _entries("kcore") == 1
     conv_rows = sorted(
         map(tuple, qs["kcore_items_converged"](spark, SF_DIR).collect())
     )
-    assert len(e._KCORE_MEMO) == 1  # second query hit the same entry
+    assert _entries("kcore") == 1  # second query hit the same entry
     assert memo_rows == conv_rows
 
     inter = R.interactions(spark, SF_DIR)
@@ -217,7 +229,7 @@ def test_kcore_memo_matches_fresh_converged(spark):
     assert memo_rows == fresh
     assert len(memo_rows) > 0
     assert all(r[2] is True for r in memo_rows)  # converged witness
-    e._KCORE_MEMO.clear()
+    cache.clear()
 
 
 def test_neardup_comps_memo_shared_and_equal(spark):
@@ -227,21 +239,22 @@ def test_neardup_comps_memo_shared_and_equal(spark):
     neardup_components derivation, and canonical_docs through the
     handle equals the standalone operator."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators import dedup as D
 
-    e._NEARDUP_COMPS_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["neardup_components"](spark, SF_DIR).collect())
     )
-    assert len(e._NEARDUP_COMPS_MEMO) == 1
+    assert _entries("neardup_comps") == 1
     canon_rows = sorted(
         map(tuple, qs["canonical_docs"](spark, SF_DIR).collect())
     )
     soft_rows = sorted(
         map(tuple, qs["soft_dedup_weights"](spark, SF_DIR).collect())
     )
-    assert len(e._NEARDUP_COMPS_MEMO) == 1  # all three hit one entry
+    assert _entries("neardup_comps") == 1  # all three hit one entry
 
     docs = e._docs(spark, SF_DIR)
     fresh_comps = sorted(
@@ -270,7 +283,7 @@ def test_neardup_comps_memo_shared_and_equal(spark):
         )
     )
     assert soft_rows == fresh_soft
-    e._NEARDUP_COMPS_MEMO.clear()
+    cache.clear()
 
 
 def test_synth_recs_memo_shared_and_equal(spark):
@@ -279,18 +292,19 @@ def test_synth_recs_memo_shared_and_equal(spark):
     synthetic_recommendations derivation, and consumers all hit one
     memo entry."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators import recommend as R
 
-    e._SYNTH_RECS_MEMO.clear()
+    cache.clear()
     qs = e.queries()
     memo_rows = sorted(
         map(tuple, qs["recommendations_topk"](spark, SF_DIR).collect())
     )
-    assert len(e._SYNTH_RECS_MEMO) == 1
+    assert _entries("synth_recs") == 1
     qs["coverage"](spark, SF_DIR).collect()
     qs["item_exposure"](spark, SF_DIR).collect()
     qs["ranking_metrics"](spark, SF_DIR).collect()
-    assert len(e._SYNTH_RECS_MEMO) == 1  # all consumers hit the entry
+    assert _entries("synth_recs") == 1  # all consumers hit the entry
 
     fresh = sorted(
         map(
@@ -302,4 +316,4 @@ def test_synth_recs_memo_shared_and_equal(spark):
     )
     assert memo_rows == fresh
     assert len(memo_rows) > 0
-    e._SYNTH_RECS_MEMO.clear()
+    cache.clear()

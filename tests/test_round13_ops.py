@@ -53,57 +53,83 @@ def test_mmr_symmetric_equals_bidir_union(spark):
     assert len(new) > 0
 
 
-def test_kcore_converged_guard_falls_back_on_unconverged_memo(spark):
-    """If the memoized fixed-8 peel did NOT converge (adversarial
-    graph: a long path peels only from the ends), the declared
-    until-converged query must NOT serve the superset table — it
-    re-runs a real until-converged peel instead (round-12 verdict
-    item 5)."""
+def _run_kcore_guard(spark, sf, fixed8, pairs, k, max_rounds=None):
+    """kcore_items_converged twice over a memoized fixed-8 peel
+    ``fixed8``, with the corpus pair table swapped for ``pairs``;
+    returns (rows of each call, number of pair-table builds)."""
     import __spark_entry__ as e
-    from recmetrics_pyspark_spark.operators.graph import k_core_decompose
+    from recmetrics_pyspark_spark import cache
 
-    # path graph 0-1-2-...-24 with k=2: each peel only removes the two
-    # endpoints, so 8 rounds leave a non-empty superset, converged=false
-    n = 25
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["ia", "ib"]
-    )
-    fixed8 = k_core_decompose(pairs, k=2, rounds=8)
-    rows8 = fixed8.collect()
-    assert rows8 and not rows8[0]["converged"]  # precondition violated
-
-    key = (spark.sparkContext.applicationId, "<r13-kcore-guard>")
-    e._KCORE_MEMO[key] = fixed8
+    cache.memo("kcore", spark, sf, lambda: fixed8)
     calls = {"n": 0}
 
     def fake_pairs(*a, **kw):
         calls["n"] += 1
         return pairs
 
-    orig_inter = e.R.interactions
-    orig_sims = e.M.item_similarity_pairs
-    orig_k = e._KCORE_K
+    orig = (e.R.interactions, e.M.item_similarity_pairs, e._KCORE_K,
+            e._KCORE_MAX_ROUNDS)
     e.R.interactions = lambda spark, sf: None
     e.M.item_similarity_pairs = fake_pairs
-    e._KCORE_K = 2
+    e._KCORE_K = k
+    if max_rounds is not None:
+        e._KCORE_MAX_ROUNDS = max_rounds
     try:
-        out = e._kcore_items_converged(spark, "<r13-kcore-guard>")
-        rows = out.collect()
+        rows = [
+            e._kcore_items_converged(spark, sf).collect() for _ in range(2)
+        ]
     finally:
-        e.R.interactions = orig_inter
-        e.M.item_similarity_pairs = orig_sims
-        e._KCORE_K = orig_k
-        e._KCORE_MEMO.pop(key, None)
+        (e.R.interactions, e.M.item_similarity_pairs, e._KCORE_K,
+         e._KCORE_MAX_ROUNDS) = orig
+        cache.clear()
+    return rows, calls["n"]
 
-    assert calls["n"] == 1  # the fallback peel actually ran
+
+def _path_graph(spark, n=25):
+    """Path 0-1-...-(n-1): with k=2 each peel only removes the two
+    endpoints, so 8 rounds leave a non-empty superset, converged=false."""
+    from recmetrics_pyspark_spark.operators.graph import k_core_decompose
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], ["ia", "ib"]
+    )
+    fixed8 = k_core_decompose(pairs, k=2, rounds=8)
+    rows8 = fixed8.collect()
+    assert rows8 and not rows8[0]["converged"]  # precondition violated
+    return pairs, fixed8
+
+
+def test_kcore_converged_guard_falls_back_on_unconverged_memo(spark):
+    """If the memoized fixed-8 peel did NOT converge (adversarial
+    graph: a long path peels only from the ends), the declared
+    until-converged query must NOT serve the superset table — it
+    runs a real until-converged peel instead (round-12 verdict
+    item 5), once per session: the second call reads the fallback's
+    own memo."""
+    pairs, fixed8 = _path_graph(spark)
+    (first, second), n_builds = _run_kcore_guard(
+        spark, "<r13-kcore-guard>", fixed8, pairs, k=2
+    )
+    assert n_builds == 1  # the fallback peel ran, and only once
     # a 25-node path has NO 2-core: the true fixed point is empty
-    assert rows == []
+    assert first == [] and second == []
+
+
+def test_kcore_converged_fallback_raises_when_backstop_bites(spark):
+    """A fallback peel that is still unconverged at max_rounds raises
+    instead of returning a superset of the core."""
+    pairs, fixed8 = _path_graph(spark)
+    with pytest.raises(ValueError, match="max_rounds=2"):
+        _run_kcore_guard(
+            spark, "<r13-kcore-backstop>", fixed8, pairs, k=2, max_rounds=2
+        )
 
 
 def test_kcore_converged_guard_serves_converged_memo(spark):
     """Happy path: a memoized table whose witness is true is served
     as-is (no rebuild)."""
     import __spark_entry__ as e
+    from recmetrics_pyspark_spark import cache
     from recmetrics_pyspark_spark.operators.graph import k_core_decompose
 
     # triangle: already a 2-core, converges in round 1
@@ -111,8 +137,7 @@ def test_kcore_converged_guard_serves_converged_memo(spark):
         [(1, 2), (2, 3), (1, 3)], ["ia", "ib"]
     )
     memo = k_core_decompose(pairs, k=2, rounds=8)
-    key = (spark.sparkContext.applicationId, "<r13-kcore-happy>")
-    e._KCORE_MEMO[key] = memo
+    cache.memo("kcore", spark, "<r13-kcore-happy>", lambda: memo)
 
     def boom(*a, **kw):  # the fallback must NOT run
         raise AssertionError("fallback peel ran on a converged memo")
@@ -124,6 +149,6 @@ def test_kcore_converged_guard_serves_converged_memo(spark):
         rows = sorted(r["node"] for r in out.collect())
     finally:
         e.M.item_similarity_pairs = orig_sims
-        e._KCORE_MEMO.pop(key, None)
+        cache.clear()
 
     assert rows == [1, 2, 3]
